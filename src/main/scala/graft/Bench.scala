@@ -498,14 +498,16 @@ object Bench {
     // per-query PERF table and scaling block have never materialized.
     // bench_summary.json carries exactly the contract fields (totals,
     // per_query, sf, cpus, normalized, ci) without the heavyweight
-    // telemetry arrays that make bench_out.json large. Written every run.
+    // telemetry arrays that make bench_out.json large. Written every run,
+    // also as bench_summary_c{cpus}.json so runs at different core counts
+    // keep one summary each instead of overwriting the shared file.
     val summary =
       s"""{"metric":"total","value":$total,"unit":"sec","value_normalized":${fmt(totalNorm)},"contention_index":${fmt(contentionIndex)},"n":${results.size},"cpus":$cpus,"reps_per_query":$reps,"operators_sec":$opsTotal,"streaming_sec":$streamTotal,"verification_sec":$checksTotal,"queries":$qs,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_summary.json"), summary + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_summary.json write failed: ${e.getMessage}")
-    }
+    for (file <- Seq("bench_summary.json", s"bench_summary_c$cpus.json"))
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(file), summary + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $file write failed: ${e.getMessage}")
+      }
     // Locale.ROOT: a comma-decimal default locale would render 1,234 and
     // break the JSON this line exists to keep parseable
     val slowest = results.sortBy(-_._2).take(10)

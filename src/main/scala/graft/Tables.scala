@@ -54,7 +54,25 @@ object Tables {
   }
 }
 
-/** Session factory with the engine's standard config. */
+/** Session factory with the engine's standard config.
+  *
+  * The local file system is replaced for both Hadoop APIs (FileSystem and
+  * FileContext) by [[graft.core.GraftLocalFileSystem]] and
+  * [[graft.core.GraftLocalFs]]. Without the native Hadoop library, Hadoop's
+  * own local file system forks a shell for every permission set (each file
+  * create) and every link-status probe (each FileContext rename), and a
+  * streaming micro-batch commits an offset log, a commit log and one state
+  * delta per partition, each with checksum sidecars: on a standing stream
+  * the forks were most of the commit time. The graft classes do those two
+  * calls in-process; checksums, `.crc` sidecars and the rename-based commit
+  * protocol are Hadoop's and Spark's own, unchanged.
+  *
+  * Caveat: Hadoop caches `FileSystem` instances JVM-wide by scheme and user,
+  * not by conf, so the first `file:` instance created in the JVM wins. A
+  * process that touches `FileSystem.get` for `file:` before its first
+  * graft session keeps Hadoop's class for the FileSystem API (FileContext
+  * is not cached and always follows the conf).
+  */
 object GraftSession {
   def builder(cpus: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
@@ -67,6 +85,9 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.kryo.registrator", "graft.core.GraftKryoRegistrator")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.core.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.core.GraftLocalFs].getName)
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": measurement hook for A/B-ing a
     // session conf across otherwise-identical runs (e.g. the state-store
     // maintenance-interval experiment in the bench-variance root cause);

@@ -191,8 +191,7 @@ object StreamingBattery {
     */
   private def runToTable(s: SparkSession, out: DataFrame,
       alsoDelete: Seq[Path] = Nil): DataFrame = {
-    def attempt(forceDisk: Boolean): DataFrame =
-        withBatteryCheckpointConf(s) {
+    def attempt(forceDisk: Boolean): DataFrame = {
       val root = scratch("graft-stream-battery", forceDisk)
       try {
         val sink = root.resolve("out"); val ck = root.resolve("ck")
@@ -239,36 +238,7 @@ object StreamingBattery {
     * the battery's batch rows keep the session default.
     */
   private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    withConf(s, "spark.sql.shuffle.partitions" -> n.toString) {
-      // NOTE (r9 ADVICE, examined and DECLINED): this nesting is NOT
-      // redundant with runToTable's — the seven foreachBatch rows (d145,
-      // d151, d158, d170, d183, d222, d236) start their queries directly
-      // inside this wrapper and never pass through runToTable, so removing
-      // the nesting here would silently re-enable checkpoint checksums for
-      // exactly the rows that pay the most tiny-file commits.
-      withBatteryCheckpointConf(s)(body)
-    }
-
-  /** Checkpoint-manager settings for the battery's THROWAWAY checkpoints
-    * (fresh scratch dir per row, tmpfs-backed, deleted in a finally —
-    * nothing ever resumes from them; d146 resumes only within its own
-    * row). Spark 4.1's ChecksumCheckpointFileManager writes a companion
-    * checksum file for EVERY checkpoint file (offset log, commit log,
-    * per-partition state deltas, sink metadata), which doubles the tiny
-    * synchronous file ops each micro-batch commits — measured r9: the
-    * 6-row stateful subset drops 19.7 s → 13.4 s with checksums off
-    * (-32%), pure harness scaffolding cost. PRODUCTION note: a standing
-    * stream checkpointing to object storage should keep the default
-    * (checksums guard against silent corruption on storage that can
-    * return bad bytes); a RAM-backed scratch dir has no such failure
-    * mode and its integrity is irrelevant one `finally` later. The
-    * commit protocol itself (atomic rename discipline, offset/commit log
-    * sequencing) still executes in full. Set-and-restore, so batch rows
-    * and any caller-owned session keep the session default.
-    */
-  private def withBatteryCheckpointConf[T](s: SparkSession)(body: => T): T =
-    withConf(s,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")(body)
+    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   private def withConf[T](s: SparkSession, kvs: (String, String)*)
       (body: => T): T = {
