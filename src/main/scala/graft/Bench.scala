@@ -55,42 +55,14 @@ package graft
   * the raw total inflates while the normalized one stays comparable across
   * rounds. Raw numbers are always kept alongside — normalization is an
   * extra lens, never a replacement.
-  *
-  * == Non-CPU attribution (r7 VERDICT #1) ==
-  *
-  * Three r7 quiet runs swung 190.5→236.3 s while BOTH estimators read
-  * quiet (canary floors 0.142–0.147 s, contention_index ≤ 1.008) — the
-  * residual swing is IO/memory/JVM-shaped, which a page-cached
-  * group-aggregate canary cannot see. The artifact therefore now carries
-  * attribution series the normalizers don't use (telemetry first,
-  * normalization only if a signal proves causal):
-  *
-  *  - at every canary position, a `probes` sample: a fixed 64 MB
-  *    write+force+read-back under the shuffle tmp dir (disk write-back +
-  *    page-cache bandwidth), a single-threaded fixed arithmetic loop
-  *    (effective per-core speed — cpu frequency / thermal / steal at
-  *    sub-scheduler granularity, invisible to the C/(C−E) core-count
-  *    model), the current cpufreq reading, and /proc/meminfo page-cache /
-  *    available figures;
-  *  - per rep, `rep_gc_ms` / `rep_jit_ms` (GC + JIT time deltas from the
-  *    management beans) and `rep_cpu_sec` (own process cpu seconds): a
-  *    slow rep with proportionally higher own-cpu is compute-shaped
-  *    (frequency, JIT re-profiling); a slow rep with flat own-cpu was
-  *    WAITING (IO, scheduling, stop-the-world) — the one split that
-  *    separates every remaining hypothesis in one artifact.
   */
 object Bench {
   /** Battery EXECUTIONS between canary samples. 24 -> ~30 samples over
     * the 242-row x (2+1)-execution battery: fine enough to track
     * minute-scale load swings, cheap enough to cost <10% of a quiet run —
-    * each sample is 3 canary runs (~0.45 s) PLUS the attribution probes
-    * (one 64 MB write+force+read-back ioProbe under the shuffle tmp dir
-    * and a ~30 ms single-thread cpu loop, r8 ADVICE: previously
-    * unbudgeted in this comment). The forced 64 MB write may briefly
-    * contend with shuffle IO for rows adjacent to a sample position;
-    * probes are telemetry-only and never fold into normalization. (Was 8
-    * rows when reps ran back-to-back per row; hybrid repetition tripled
-    * the position count, so 24 keeps the same sample budget.)
+    * each sample is 3 canary runs (~0.45 s). (Was 8 rows when reps ran
+    * back-to-back per row; hybrid repetition tripled the position count,
+    * so 24 keeps the same sample budget.)
     */
   val canaryPeriod = 24
 
@@ -167,116 +139,12 @@ object Bench {
     math.max(1.0, cores / free)
   }
 
-  /** Single-threaded fixed arithmetic loop (20M LCG steps, ~30 ms quiet):
-    * effective per-core speed. Slows 1:1 with cpu frequency / thermal
-    * throttling / hypervisor steal — the per-core effects the C/(C−E)
-    * core-count model reads as 1.0. Returns wall seconds.
-    */
-  private def cpuSpeedProbe(): Double = {
-    var x = 1469598103934665603L
-    val t0 = System.nanoTime()
-    var i = 0
-    while (i < 20000000) {
-      x = x * 6364136223846793005L + 1442695040888963407L; i += 1
-    }
-    val dt = (System.nanoTime() - t0) / 1e9
-    if (x == 42L) System.err.println("") // keep the loop un-eliminable
-    dt
-  }
-
-  /** Fixed 64 MB write+force then read-back under the JVM tmp dir (where
-    * Spark's shuffle files land in this image): (write sec, read sec).
-    * Write+force tracks disk write-back pressure; the immediate read-back
-    * is page-cache-resident by construction, so it tracks memory
-    * bandwidth, not disk. Deterministic content; (-1,-1) on any failure.
-    */
-  private def ioProbe(): (Double, Double) = {
-    try {
-      val dir = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-      val f = java.nio.file.Files.createTempFile(dir, "graft_iocanary", ".bin")
-      try {
-        val buf = java.nio.ByteBuffer.allocate(1 << 20)
-        var i = 0
-        while (i < (1 << 20)) { buf.put(i, (i * 131).toByte); i += 1 }
-        val ch = java.nio.channels.FileChannel.open(f,
-          java.nio.file.StandardOpenOption.WRITE)
-        val t0 = System.nanoTime()
-        var m = 0
-        while (m < 64) {
-          buf.rewind(); while (buf.hasRemaining) ch.write(buf); m += 1
-        }
-        ch.force(false)
-        ch.close()
-        val wSec = (System.nanoTime() - t0) / 1e9
-        val rch = java.nio.channels.FileChannel.open(f,
-          java.nio.file.StandardOpenOption.READ)
-        val rbuf = java.nio.ByteBuffer.allocate(1 << 20)
-        val t1 = System.nanoTime()
-        var n = rch.read(rbuf)
-        while (n >= 0) { rbuf.clear(); n = rch.read(rbuf) }
-        val rSec = (System.nanoTime() - t1) / 1e9
-        rch.close()
-        (wSec, rSec)
-      } finally java.nio.file.Files.deleteIfExists(f)
-    } catch { case _: Throwable => (-1.0, -1.0) }
-  }
-
-  /** Current cpu0 frequency in MHz (cpufreq sysfs, /proc/cpuinfo
-    * fallback); -1.0 where neither is exposed (common in containers).
-    */
-  private def freqMHz(): Double =
-    try java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "/sys/devices/system/cpu/cpu0/cpufreq/scaling_cur_freq"))
-      .trim.toDouble / 1000.0
-    catch {
-      case _: Throwable =>
-        try java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/cpuinfo")).linesIterator
-          .collectFirst { case l if l.startsWith("cpu MHz") =>
-            l.split(":")(1).trim.toDouble }.getOrElse(-1.0)
-        catch { case _: Throwable => -1.0 }
-    }
-
-  /** (page-cache MB, MemAvailable MB) from /proc/meminfo; (-1,-1) where
-    * unreadable. A shrinking cache across a run means the corpus was
-    * being evicted — the one state that would make parquet scans
-    * disk-bound on a re-read.
-    */
-  private def memInfoMb(): (Double, Double) =
-    try {
-      val m = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/meminfo")).linesIterator
-        .map(_.split("\\s+")).collect {
-          case Array(k, v, _*) if k == "Cached:" || k == "MemAvailable:" =>
-            k -> v.toDouble / 1024.0
-        }.toMap
-      (m.getOrElse("Cached:", -1.0), m.getOrElse("MemAvailable:", -1.0))
-    } catch { case _: Throwable => (-1.0, -1.0) }
-
-  /** Cumulative stop-the-world GC milliseconds across all collectors. */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-  }
-
-  /** Cumulative JIT compilation milliseconds; -1 where unsupported. */
-  private def jitMillis(): Long =
-    try java.lang.management.ManagementFactory.getCompilationMXBean
-      .getTotalCompilationTime
-    catch { case _: Throwable => -1L }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Benchmark honesty: disable cross-query work sharing (d23/d45 MinHash
-    // pair memo) so each query's wall time is its FULL standalone pipeline,
-    // comparable across rounds regardless of battery order.
-    Queries.pairMemoEnabled = false
     // warm the JVM + parquet footers once so per-query numbers measure the
     // queries, not first-touch setup
     Tables.lineitem(spark, sfDir).count()
@@ -303,19 +171,8 @@ object Bench {
     // ignore it for the floor, but the interpolated factor would over-deflate
     // the first battery rows.
     (1 to 2).foreach(_ => canaryOnce())
-    // attribution probes (see scaladoc): sampled at the same positions as
-    // the canary, NOT folded into normalization — telemetry for the
-    // quiet-box-swing root cause, so each probe is one shot (min-of-N
-    // would hide exactly the transients being attributed)
-    val probeSamples = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Double, Double, Double, Double, Double, Double)]
-    def sampleCanary(pos: Int): Unit = {
+    def sampleCanary(pos: Int): Unit =
       canarySamples += ((pos, canarySample(), load1()))
-      val (ioW, ioR) = ioProbe()
-      val (cached, avail) = memInfoMb()
-      probeSamples += ((pos, ioW, ioR, cpuSpeedProbe(), freqMHz(),
-        cached, avail))
-    }
     sampleCanary(0)
 
     // SPARK_GRAFT_BENCH_ONLY=d139,d124 runs just the named prefixes — an
@@ -350,10 +207,10 @@ object Bench {
     // while capping an episode row at its (semi-cold but sane) pass-2
     // wall. Pure pass-major was measured and REJECTED: it filters
     // episodes but loses the warm pair entirely (median row +36%).
-    // per row: executions as (wall, cpuModelFactor, ownCpuSec, gcMs,
-    // jitMs, execPos) + loadavg per execution, pass-1 pair first
+    // per row: executions as (wall, cpuModelFactor, execPos) + loadavg
+    // per execution, pass-1 pair first
     val measurements = Array.fill(battery.size)(scala.collection.mutable
-      .ArrayBuffer.empty[(Double, Double, Double, Long, Long, Int)])
+      .ArrayBuffer.empty[(Double, Double, Int)])
     val rowLoads = Array.fill(battery.size)(
       scala.collection.mutable.ArrayBuffer.empty[Double])
     var execPos = 0
@@ -363,7 +220,6 @@ object Bench {
       spark.catalog.clearCache()
       rowLoads(idx) += load1()
       val ticks0 = cpuTicks()
-      val gc0 = gcMillis(); val jit0 = jitMillis()
       val t0 = System.nanoTime()
       // Consume the FULL plan distributed-side: `toRdd.foreach` materializes
       // every output row (count() would let Catalyst prune projections and
@@ -371,13 +227,8 @@ object Bench {
       try {
         fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
         val wall = (System.nanoTime() - t0) / 1e9
-        val ticks1 = cpuTicks()
-        val ownCpuSec =
-          if (ticks0._2 >= 0 && ticks1._2 >= 0)
-            (ticks1._2 - ticks0._2) / 100.0
-          else -1.0
-        measurements(idx) += ((wall, cpuFactor(ticks0, ticks1, wall, cpus),
-          ownCpuSec, gcMillis() - gc0, jitMillis() - jit0, execPos))
+        measurements(idx) += ((wall,
+          cpuFactor(ticks0, cpuTicks(), wall, cpus), execPos))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed (pass $pass): " +
@@ -415,7 +266,7 @@ object Bench {
     val appliedFactors = scala.collection.mutable.ArrayBuffer.empty[Double]
     val normalized = repTimes.map { case (name, times, _) =>
       name -> (if (times.nonEmpty) {
-        times.map { case (wall, cpuF, _, _, _, pos) =>
+        times.map { case (wall, cpuF, pos) =>
           val f = math.max(1.0, math.min(factorAt(pos), cpuF))
           appliedFactors += f
           wall / f
@@ -442,30 +293,12 @@ object Bench {
     val repCpuJson = repTimes.map { case (k, ts, _) =>
       "\"" + k + "\":[" + ts.map(t => fmt(t._2)).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // attribution arrays (scaladoc "Non-CPU attribution"): own-process cpu
-    // seconds, GC ms, JIT ms per rep — wall-vs-cpu classifies a slow rep
-    // as compute-shaped or wait-shaped without re-running anything
-    val repOwnCpuJson = repTimes.map { case (k, ts, _) =>
-      "\"" + k + "\":[" + ts.map(t => fmt(t._3)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val repGcJson = repTimes.map { case (k, ts, _) =>
-      "\"" + k + "\":[" + ts.map(_._4.toString).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val repJitJson = repTimes.map { case (k, ts, _) =>
-      "\"" + k + "\":[" + ts.map(_._5.toString).mkString(",") + "]"
-    }.mkString("{", ",", "}")
     val canaryJson = {
       val samples = canarySamples.map { case (p, w, l) =>
         s"""{"pos":$p,"sec":${fmt(w)},"load1":${fmt(l)}}"""
       }.mkString("[", ",", "]")
       s"""{"floor_sec":${fmt(canaryFloor)},"period":$canaryPeriod,"samples":$samples}"""
     }
-    val probesJson = probeSamples.map {
-      case (p, ioW, ioR, cpu1, mhz, cached, avail) =>
-        s"""{"pos":$p,"io_w_sec":${fmt(ioW)},"io_r_sec":${fmt(ioR)},""" +
-          s""""cpu1_sec":${fmt(cpu1)},"freq_mhz":${fmt(mhz)},""" +
-          s""""cached_mb":${fmt(cached)},"avail_mb":${fmt(avail)}}"""
-    }.mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val totalNorm = normalized.map(_._2).sum
     // split three regimes so each trend stays legible across rounds:
@@ -481,7 +314,7 @@ object Bench {
     val streamTotal = streamRows.map(_._2).sum
     val checksTotal = checkRows.map(_._2).sum
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_normalized":${fmt(totalNorm)},"contention_index":${fmt(contentionIndex)},"cpus":$cpus,"reps_per_query":$reps,"operators_sec":$opsTotal,"streaming_sec":$streamTotal,"verification_sec":$checksTotal,"canary":$canaryJson,"probes":$probesJson,"rep_times":$repsJson,"rep_loads":$repLoadsJson,"rep_cpu_factors":$repCpuJson,"rep_own_cpu_sec":$repOwnCpuJson,"rep_gc_ms":$repGcJson,"rep_jit_ms":$repJitJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","value_normalized":${fmt(totalNorm)},"contention_index":${fmt(contentionIndex)},"cpus":$cpus,"reps_per_query":$reps,"operators_sec":$opsTotal,"streaming_sec":$streamTotal,"verification_sec":$checksTotal,"canary":$canaryJson,"rep_times":$repsJson,"rep_loads":$repLoadsJson,"rep_cpu_factors":$repCpuJson,"queries":$qs,"sf":"$sfDir"}"""
     println(full)
     // The driver's tail capture clipped the single ~6 KB line from the FRONT
     // in r2 and r3 ("parsed": null in BENCH_r*.json), losing the totals. So:
@@ -514,7 +347,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","value_normalized":${fmt(totalNorm)},"contention_index":${fmt(contentionIndex)},"n":${results.size},"cpus":$cpus,"operators_sec":$opsTotal,"streaming_sec":$streamTotal,"verification_sec":$checksTotal,"slowest":$slowest,"sf":"$sfDir","full":"bench_out.json","summary":"bench_summary.json"}""")
-    ModelChecks.clearSharedDerivations() // drain pinned check blocks
+    RunScope.clear() // release shared check blocks and staged inputs
     spark.stop()
   }
 }

@@ -22,7 +22,6 @@ object JobProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Queries.pairMemoEnabled = false
     Tables.lineitem(spark, sfDir).count() // warm JVM + footers
 
     val jobs = new AtomicInteger
@@ -66,7 +65,7 @@ object JobProbe {
           f"shufMB=${(shufReadB.get + shufWriteB.get) / 1e6}%8.2f")
       }
     }
-    ModelChecks.clearSharedDerivations()
+    RunScope.clear()
     spark.stop()
   }
 }

@@ -36,31 +36,26 @@ object ModelChecks {
   // shared derivations across check rows
   // ---------------------------------------------------------------------
 
-  /** Per-JVM memo of derivations SHARED between verification rows: d129
-    * and d130 both need the d23 MinHash pair set, d132 and d133 both need
-    * the brute-force cosine ≥ 0.3 pair set over embeddings. Each is
+  /** Derivations SHARED between verification rows: d129 and d130 both
+    * need the d23 MinHash pair set, d132 and d133 both need the
+    * brute-force cosine ≥ 0.3 pair set over embeddings. Each is
     * verification INPUT, not the property under test — the checks
     * themselves (8σ bounds, labeling laws, subset/soundness counters)
-    * always recompute — so materializing it once per (application, sf
-    * dir) cuts the harness cost without weakening any check. Results are
-    * `localCheckpoint(true)`-backed (RDD blocks, pair-set-sized by the
-    * battery's cap contracts), so they survive Bench's per-rep
-    * `catalog.clearCache()`; the FIRST access in a bench run still pays
-    * the full build and is visible in the artifact's per-row rep_times.
-    * Keyed by applicationId so a fresh session can never see a stale
-    * entry. Set [[sharedDerivationsEnabled]] = false to force every
-    * check row standalone (spec isolation).
+    * always recompute — so it is a [[RunScope]] entry, materialized once
+    * per (application, sf dir). Results are `localCheckpoint(true)`-backed
+    * (RDD blocks, pair-set-sized by the battery's cap contracts), so they
+    * survive Bench's per-rep `catalog.clearCache()`; the FIRST access in a
+    * bench run still pays the full build and is visible in the artifact's
+    * per-row rep_times. The release unpersists the checkpoint RDD — a
+    * localCheckpoint's Dataset.unpersist is a no-op (the blocks live on
+    * the checkpoint RDD, not in the CacheManager).
     */
-  @volatile var sharedDerivationsEnabled: Boolean = true
-  private val derivMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  // RDDs pinned by each shared() materialization (memoized AND
-  // disabled-path transients), so the drain hook can release the blocks —
-  // a localCheckpoint's Dataset.unpersist is a no-op (the blocks live on
-  // the checkpoint RDD, not in the CacheManager)
-  private val pinnedRdds =
-    java.util.concurrent.ConcurrentHashMap
-      .newKeySet[org.apache.spark.rdd.RDD[_]]
+  private def shared(s: SparkSession, d: String, name: String)
+      (build: => DataFrame): DataFrame =
+    RunScope.getOrBuild(s, d, name) {
+      val ck = build.localCheckpoint(true) // eager: blocks exist on return
+      (ck, pinnedAncestors(ck.queryExecution.toRdd))
+    } { case (_, pinned) => pinned.foreach(_.unpersist(blocking = false)) }._1
 
   /** The persisted ancestors of a plan's RDD lineage — for a localCheckpoint
     * Dataset, exactly the checkpoint RDD holding the blocks. Walked from
@@ -74,44 +69,10 @@ object ModelChecks {
       Seq(rdd)
     else rdd.dependencies.map(_.rdd).flatMap(pinnedAncestors)
 
-  private def shared(s: SparkSession, d: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    def checkpointTracked(): DataFrame = {
-      val ck = build.localCheckpoint(true) // eager: blocks exist on return
-      pinnedAncestors(ck.queryExecution.toRdd).foreach(pinnedRdds.add)
-      ck
-    }
-    // disabled path still materializes PER CALL (no cross-row sharing):
-    // the callers consume the derivation several times each (exceptAll
-    // legs, violation joins), and the pre-memo code pinned exactly one
-    // materialization via persist+count — returning the raw plan here
-    // would recompute the full LSH/cosine derivation per consumer
-    if (!sharedDerivationsEnabled) checkpointTracked()
-    else derivMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" +
-        new java.io.File(d).getAbsolutePath + "|" + name,
-      _ => checkpointTracked())
-  }
-
-  /** Drain hook for every block [[shared]] ever pinned (memo entries and
-    * disabled-path transients): unpersists the checkpoint RDDs and clears
-    * the memo. Without it a long session touching many sf dirs
-    * accumulates pinned RDD blocks for the JVM's lifetime (r6 ADVICE).
-    *
-    * CONTRACT: call only when no outstanding plan still reads a shared
-    * derivation (between sf dirs, at battery end, spec afterAll) — these
-    * are LOCAL checkpoints, so released blocks are unrecoverable and a
-    * late consumer would fail, loudly, rather than recompute.
+  /** Drains the whole [[RunScope]]; kept as the public name benchmark
+    * harnesses call between runs. Same contract as [[RunScope.clear]].
     */
-  def clearSharedDerivations(): Unit = {
-    val it = pinnedRdds.iterator()
-    while (it.hasNext) {
-      try it.next().unpersist(blocking = false)
-      catch { case _: Throwable => () } // stopped session: blocks are gone
-    }
-    pinnedRdds.clear()
-    derivMemo.clear()
-  }
+  def clearSharedDerivations(): Unit = RunScope.clear()
 
   /** The d23 emitted pair set (id1, id2, jaccard_est) — d129 verifies its
     * estimates, d130 clusters it; one LSH run serves both.

@@ -51,7 +51,7 @@ object PlanDump {
             failures += name
         }
       }
-    ModelChecks.clearSharedDerivations()
+    RunScope.clear()
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)
   }

@@ -345,42 +345,17 @@ object Queries {
       .groupBy(col("lang"))
       .agg(expr("CAST(COUNT(*) AS BIGINT)").as("n_survivors"))
 
-  /** Memoized MinHash pair table, shared by d23 (pairs) and d45 (clusters):
-    * in a real pipeline the LSH pass runs once and feeds both the pair
-    * report and the transitive-cluster census — recomputing it per consumer
-    * doubles the most expensive stage. Keyed by dataset dir; the pair list
-    * is already `localCheckpoint`ed (small, lineage-free), so reuse is a
-    * block read, not a recompute. d23 always refreshes the memo (so its
-    * own timing stays honest); d45 reuses when present. Keyed by
-    * (application, dir) so a new SparkSession never receives a DataFrame
-    * bound to a stopped one; a replaced entry's blocks are NOT released
-    * eagerly (a caller may still hold the old DataFrame) — the
-    * ContextCleaner frees them when the last reference is collected.
-    *
-    * Benchmark honesty: with the memo on, d45's wall time excludes the LSH
-    * pair stage whenever d23 ran earlier in the same JVM, so its number
-    * measures the cluster stage only and is not comparable to a standalone
-    * run. `Bench` therefore sets [[pairMemoEnabled]] = false so every
-    * benchmarked query pays its full pipeline; Verify/library callers keep
-    * the sharing (correctness is identical either way).
+  /** Retained only because the `perfbench/` harness assigns it; it has no
+    * effect. The d23/d45 pair memo it used to switch is gone: a battery
+    * row's own work is never shared (see [[RunScope]]), so d45 computes
+    * its own MinHash pairs.
     */
   @volatile var pairMemoEnabled: Boolean = true
-  private val minhashPairMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def computeMinhashPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.minHashLshPairs(Tables.documents(s, d), "doc_id", "text",
-      shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5)
-
-  private def memoKey(s: SparkSession, d: String): String =
-    s"${s.sparkContext.applicationId}:$d"
 
   /** MinHash-LSH near-dup candidate pairs (no SQL oracle: xxhash-based). */
-  def d23MinhashPairs(s: SparkSession, d: String): DataFrame = {
-    val pairs = computeMinhashPairs(s, d)
-    if (pairMemoEnabled) minhashPairMemo.put(memoKey(s, d), pairs)
-    pairs
-  }
+  def d23MinhashPairs(s: SparkSession, d: String): DataFrame =
+    Dedup.minHashLshPairs(Tables.documents(s, d), "doc_id", "text",
+      shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5)
 
   /** SimHash near-dup pairs via Hamming block probing (no SQL oracle). */
   def d24SimhashPairs(s: SparkSession, d: String): DataFrame =
@@ -605,11 +580,7 @@ object Queries {
     * MinHash pair graph (no SQL oracle: xxhash-based candidates).
     */
   def d45DedupClusters(s: SparkSession, d: String): DataFrame = {
-    val pairs =
-      if (pairMemoEnabled)
-        minhashPairMemo.computeIfAbsent(memoKey(s, d), _ => computeMinhashPairs(s, d))
-      else computeMinhashPairs(s, d)
-    Dedup.connectedComponents(pairs)
+    Dedup.connectedComponents(d23MinhashPairs(s, d))
       .groupBy(col("cluster_id"))
       .agg(expr("CAST(COUNT(*) AS BIGINT)").as("n_members"))
   }
@@ -3907,6 +3878,15 @@ object Queries {
         round(col("__pr"), 6).as("pct_rank"))
   }
 
+  /** md5 of the absolute input path, 16 hex chars — the scratch-path tag for
+    * queries that materialize per input dir (String.hashCode is 32-bit; two
+    * dirs colliding would silently mix tables built from another dataset).
+    */
+  private def pathTag(d: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(new java.io.File(d).getAbsolutePath.getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
+
   /** Bucketed co-located join: both fact tables are written bucketed+sorted
     * on the join key ([[graft.operators.ScaleOps.writeBucketed]]), then
     * joined back — the layout that makes a repeated 100 TB fact-to-fact
@@ -3923,46 +3903,28 @@ object Queries {
     * two concurrent sessions over the same input dir would race the
     * overwrite, same as any shared external table.
     *
-    * The write is memoized per (application, input dir): a bench rep
-    * re-running the query measures the READ+JOIN — the steady-state cost
-    * the bucketed layout exists to demonstrate — not a table rewrite the
-    * first rep already did. The write path itself stays pinned by
+    * The write is a [[RunScope]] entry: a bench rep re-running the query
+    * measures the READ+JOIN — the steady-state cost the bucketed layout
+    * exists to demonstrate — not a table rewrite the first rep already
+    * did. The entry is never invalidated within a scope (data regenerated
+    * under the same path mid-scope would be served stale — fine for the
+    * battery's immutable inputs); its release is a no-op, so d97 rewrites
+    * the tables after a drain. The write path itself stays pinned by
     * BucketedJoinSpec. Path tag: [[pathTag]].
     */
-  /** md5 of the absolute input path, 16 hex chars — the scratch-path tag for
-    * queries that materialize per input dir (String.hashCode is 32-bit; two
-    * dirs colliding would silently mix tables built from another dataset).
-    */
-  private def pathTag(d: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(d).getAbsolutePath.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-
-  // memo key = (applicationId, absolute input dir): the bucketed copy is
-  // written once per app and NEVER invalidated within it — if the data
-  // under the same path were regenerated mid-app, later d97 calls would
-  // serve the stale table. Fine for the battery's immutable inputs and
-  // sequential bench reps; key on input file mtimes if that ever changes.
-  private val bucketedWritten = scala.collection.mutable.Set.empty[(String, String)]
-
   def d97BucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val abs = new java.io.File(d).getAbsolutePath
     val tag = pathTag(d)
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_bucketed_" + System.getProperty("user.name", "anon")).getAbsolutePath
-    val key = (s.sparkContext.applicationId, abs)
-    bucketedWritten.synchronized {
-      if (!bucketedWritten.contains(key)) {
-        graft.operators.ScaleOps.writeBucketed(
-          Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-          s"graft_bo_$tag", s"$base/bo_$tag", Seq("o_orderkey"), 8)
-        graft.operators.ScaleOps.writeBucketed(
-          Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"),
-            col("l_extendedprice")),
-          s"graft_bl_$tag", s"$base/bl_$tag", Seq("l_orderkey"), 8)
-        bucketedWritten += key // only after both writes succeed
-      }
-    }
+    RunScope.getOrBuild(s, d, "d97bucketed") {
+      graft.operators.ScaleOps.writeBucketed(
+        Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
+        s"graft_bo_$tag", s"$base/bo_$tag", Seq("o_orderkey"), 8)
+      graft.operators.ScaleOps.writeBucketed(
+        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"),
+          col("l_extendedprice")),
+        s"graft_bl_$tag", s"$base/bl_$tag", Seq("l_orderkey"), 8)
+    }(_ => ())
     val o = s.table(s"graft_bo_$tag")
     val l = s.table(s"graft_bl_$tag")
     l.join(o, l("l_orderkey") === o("o_orderkey"))

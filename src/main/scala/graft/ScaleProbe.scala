@@ -16,7 +16,6 @@ object ScaleProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Queries.pairMemoEnabled = false
     Tables.documents(spark, sfDir).count() // warm JVM + footers
     val out = args.drop(1).toSeq.map { name =>
       val fn = SparkEntry.queries(name)

@@ -60,9 +60,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // every dump is written — the shared-derivation blocks have no
-    // remaining consumers (drain contract, ModelChecks scaladoc)
-    ModelChecks.clearSharedDerivations()
+    // every dump is written — no plan still reads a shared entry (drain
+    // contract, RunScope scaladoc)
+    RunScope.clear()
     spark.stop()
     if (failures.nonEmpty) {
       System.err.println(s"[verify] ${failures.size} queries failed: ${failures.mkString(", ")}")

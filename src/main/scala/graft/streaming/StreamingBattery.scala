@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Queries, Tables}
+import graft.{Queries, RunScope, Tables}
 import graft.core._
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -43,8 +43,8 @@ object StreamingBattery {
     * latency profile, which a local disk models no better than RAM
     * does). The commit protocol itself still executes in full; only the
     * medium changes. Per-run roots are deleted in each row's finally;
-    * memoized staged-input roots live until the JVM shutdown hook
-    * drains them (bounded: one small staged copy per battery row).
+    * staged-input roots live until the [[graft.RunScope]] drains
+    * (bounded: one small staged copy per battery row).
     */
   private def scratch(prefix: String, forceDisk: Boolean = false): Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
@@ -75,62 +75,47 @@ object StreamingBattery {
     false
   }
 
-  /** Memoized staged INPUT for a battery row, keyed by (application, sf
-    * dir, row): the staging pass — deterministic slice writes, vacuity
-    * censuses, sentinel files over the same standing parquet — is
-    * harness scaffolding, not the property under test, so a second
-    * bench rep (or Verify after a bench) re-stages nothing. The
+  /** Staged INPUT for a battery row, a [[graft.RunScope]] entry keyed by
+    * (application, sf dir, row): the staging pass — deterministic slice
+    * writes, vacuity censuses, sentinel files over the same standing
+    * parquet — is harness scaffolding, not the property under test, so a
+    * second bench rep (or Verify after a bench) re-stages nothing. The
     * STREAMING QUERY itself still runs in full every invocation: each
     * run gets a fresh checkpoint + sink (runToTable / per-row ck), so
     * offsets are never resumed and every file replays through the
     * operators. Rows that MUTATE their input mid-row (d146's two-phase
-    * resume) must not use this. Staged roots are deleted by a JVM
-    * shutdown hook instead of per-run finallys.
+    * resume) must not use this. The entry's release deletes the staged
+    * root.
     */
-  private val stagedRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
-  private val stageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedRoots.forEach(r =>
-        try deleteRecursively(r) catch { case _: Throwable => () })))
-  }
-
   private def stagedInput(s: SparkSession, d: String, rowKey: String)
       (build: (Path, Path) => Unit): Path =
-    stageMemo.computeIfAbsent(
-      s.sparkContext.applicationId + "|" +
-        new java.io.File(d).getAbsolutePath + "|" + rowKey,
-      _ => {
-        def stage(forceDisk: Boolean): Path = {
-          val root = scratch(s"graft-staged-$rowKey-", forceDisk)
-          try {
-            stagedRoots.add(root)
-            val in = root.resolve("in")
-            Files.createDirectories(in)
-            build(root, in)
-            in
-          } catch {
-            case e: Throwable =>
-              // drop THIS attempt's partial copy only — other memo entries
-              // for the same rowKey (different sf dirs) stay valid
-              stagedRoots.remove(root)
-              try deleteRecursively(root) catch { case _: Throwable => () }
-              throw e
-          }
+    RunScope.getOrBuild(s, d, s"staged-$rowKey") {
+      def stage(forceDisk: Boolean): Path = {
+        val root = scratch(s"graft-staged-$rowKey-", forceDisk)
+        try {
+          val in = root.resolve("in")
+          Files.createDirectories(in)
+          build(root, in)
+          in
+        } catch {
+          case e: Throwable =>
+            // drop THIS attempt's partial copy only — other entries for
+            // the same rowKey (different sf dirs) stay valid
+            try deleteRecursively(root) catch { case _: Throwable => () }
+            throw e
         }
-        try stage(forceDisk = false)
-        catch {
-          case e: Throwable if isNoSpace(e) =>
-            // tmpfs filled mid-staging (see isNoSpace): restage the row on
-            // disk — slower, never wrong
-            System.err.println(
-              s"[battery] $rowKey staging hit ENOSPC on tmpfs; " +
-                "restaging on disk")
-            stage(forceDisk = true)
-        }
-      })
+      }
+      try stage(forceDisk = false)
+      catch {
+        case e: Throwable if isNoSpace(e) =>
+          // tmpfs filled mid-staging (see isNoSpace): restage the row on
+          // disk — slower, never wrong
+          System.err.println(
+            s"[battery] $rowKey staging hit ENOSPC on tmpfs; " +
+              "restaging on disk")
+          stage(forceDisk = true)
+      }
+    }(in => deleteRecursively(in.getParent))
 
   /** At-least-once guard for the driver-held `foreachBatch` folds (d145
     * incremental agg, d151 CDC snapshot, d158 constraint totals, d170

@@ -267,7 +267,9 @@ class LocalFsSpec extends SparkTestBase {
       // cannot land inside the recording
       Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
       val rec = new Recording()
-      rec.enable("jdk.ProcessStart")
+      // stack traces are off by default for an unconfigured Recording, and
+      // artifactCleanup below needs them
+      rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
       val batches =
         try Seq(statefulSink(src, d.resolve("ck-s"), d.resolve("out-s")),

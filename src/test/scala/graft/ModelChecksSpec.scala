@@ -124,18 +124,19 @@ class ModelChecksSpec extends SparkTestBase {
       "truncated payload still decodes — the check could never fire")
   }
 
-  test("shared-derivation memo changes nothing: d130 with memo == without") {
-    // the memo is a materialization cache, never a semantic shortcut —
-    // the same check run standalone (memo disabled) must produce the
-    // identical violation counters
-    val withMemo = ModelChecks.d130CheckClusterConsistency(spark, sf)
+  test("shared-derivation scope changes nothing: d130 after d129 == fresh d130") {
+    // the scope is a materialization cache, never a semantic shortcut —
+    // d130 reading the pair set d129 left in the scope must produce the
+    // identical violation counters as d130 building it in a fresh scope
+    ModelChecks.d129CheckMinhashEst(spark, sf).collect()
+    assert(RunScope.peek(spark, sf, "d23pairs").isDefined,
+      "d129 left no shared pair set — the comparison would be vacuous")
+    val afterD129 = ModelChecks.d130CheckClusterConsistency(spark, sf)
       .collect().map(_.toSeq).toSeq
-    ModelChecks.sharedDerivationsEnabled = false
-    try {
-      val without = ModelChecks.d130CheckClusterConsistency(spark, sf)
-        .collect().map(_.toSeq).toSeq
-      assert(withMemo == without, s"$withMemo vs $without")
-    } finally ModelChecks.sharedDerivationsEnabled = true
+    ModelChecks.clearSharedDerivations()
+    val fresh = ModelChecks.d130CheckClusterConsistency(spark, sf)
+      .collect().map(_.toSeq).toSeq
+    assert(afterD129 == fresh, s"$afterD129 vs $fresh")
   }
 
   test("clearSharedDerivations drains and a fresh run rebuilds identically") {
